@@ -4,7 +4,7 @@ import java.time.LocalDate
 import org.apache.spark.sql.SparkSession
 import graft.ingest.{IngestPipeline, Normalize, ShopifyClient}
 import graft.io.InvoiceCsv
-import graft.queries.{InvoiceNumbers, InvoiceView}
+import graft.queries.InvoiceNumbers
 import graft.store.ShopifyStore
 import graft.verify.Checks
 import graft.viz.Heatmap
@@ -80,8 +80,7 @@ object Main {
 
     case "tripletex-generate" =>
       val store = new ShopifyStore(spark, flags("store"))
-      val view = InvoiceView.tripletexInvoice(store.invoiceTables)
-      val numbered = InvoiceNumbers.numberInvoices(view,
+      val numbered = InvoiceNumbers.numberInvoices(store.invoiceTables,
         LocalDate.parse(flags("from-date")), LocalDate.parse(flags("to-date")),
         flags.getOrElse("invoice-start-id", "1").toLong)
       val renamed = InvoiceNumbers.replaceInvoiceGateway(numbered, gateways.toMap)

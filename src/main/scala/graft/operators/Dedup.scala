@@ -72,27 +72,6 @@ object Dedup {
   private def aCoef(i: Int): Long = 2L * (1103515245L * (i + 1) % (p / 4)) + 1L
   private def bCoef(i: Int): Long = 472882027L * (i + 7) % p
 
-  /** Exact `x mod p` for NON-NEGATIVE x < 2^63 via the Mersenne identity
-    * 2^31 ≡ 1 (mod 2^31−1): fold the high 32 bits onto the low 31 twice,
-    * then one conditional subtract. Bit-identical to `pmod(x, p)` for
-    * x ≥ 0 (pinned by DedupSpec over boundary and random inputs), but
-    * shifts/adds instead of a hardware 64-bit division — and the
-    * signature aggregate runs this `numHashes` times per shingle row on
-    * the map side, so the division was most of the pass's per-row cost
-    * (guide §1.2 per-task work). Range proof: x < 2^63 ⇒
-    * y1 = (x & p) + (x >>> 31) < 2^31 + 2^32 < 2^33 ⇒
-    * y2 = (y1 & p) + (y1 >>> 31) < 2^31 + 4 < 2p ⇒ one subtract lands in
-    * [0, p).
-    */
-  private def mersenneMod(x: Column): Column = {
-    val y1 = x.bitwiseAND(lit(p)) + shiftrightunsigned(x, 31)
-    val y2 = y1.bitwiseAND(lit(p)) + shiftrightunsigned(y1, 31)
-    when(y2 >= p, y2 - p).otherwise(y2)
-  }
-
-  /** Seam for the equivalence spec: the Mersenne reduction as a column. */
-  private[operators] def mersenneModColumn(x: Column): Column = mersenneMod(x)
-
   /** One-pass per-doc aggregate over the shingle table: the shingle COUNT
     * and all k permutation minima from a single groupBy — one shuffle where
     * computing signatures and counts separately pays two passes over the

@@ -7,161 +7,41 @@ import org.apache.spark.sql.expressions.Window
 
 /** Invoice-number assignment (`/root/reference/db.py:409-483`): date-window
   * the view, build a distinct ("ORDER NO", payment_tag) index, number it
-  * with a start offset, and RIGHT JOIN back — the range restriction of the
-  * full view happens *via the join* (filtering-by-join, SURVEY §3 E2), not
-  * by filtering `ti` itself. Reproduced exactly.
+  * with a start offset, and join it back onto the view — the range
+  * restriction of the full view happens *via the join* (filtering-by-join,
+  * SURVEY §3 E2), not by filtering the view itself.
   *
   * Divergence (documented, SURVEY §2.5 W3): the reference numbers with
   * `ROW_NUMBER() OVER ()` — arbitrary order. We impose
   * ORDER BY ("ORDER NO", payment_tag): deterministic, still dense from
   * `invoiceStartId`.
-  *
-  * Scale note: the global row_number runs on the *grouped index* (one row
-  * per order+tag), orders of magnitude smaller than the line-level view —
-  * a single-partition window over it is the right trade at any SF. The
-  * invoice view feeding both sides is computed once (cached by caller or
-  * recomputed — Catalyst reuses the exchange under AQE).
   */
 object InvoiceNumbers {
 
-  def numberInvoices(view: DataFrame, fromDate: LocalDate, toDate: LocalDate,
+  /** The numbered invoices for `[fromDate, toDate]`: builds the view
+    * ([[InvoiceView.tripletexInvoice]]) and numbers it.
+    *
+    * The pair index is built from [[InvoiceView.tripletexInvoicePairDates]]
+    * — a NARROW source of (ORDER NO, payment_tag, INVOICE DATE) rows with
+    * the same pair/date content as the view — so the wide view is traversed
+    * exactly once, by the final join. The inner join reproduces the
+    * reference's RIGHT join (`db.py:459-469`, spec-asserted in
+    * GoldenE2ESpec) because every index pair has ≥1 view row by
+    * construction; a pair whose dates straddle the range keeps ALL its
+    * rows. The only single-partition work is the row_number over the
+    * distinct pair index (orders × tags — far smaller than the line-level
+    * view), and the numbered index broadcasts back onto the view.
+    */
+  def numberInvoices(t: InvoiceView.Tables, fromDate: LocalDate, toDate: LocalDate,
                      invoiceStartId: Long): DataFrame = {
-    val inRange = view.filter(
-      col("INVOICE DATE").between(lit(fromDate.toString).cast("date"),
-        lit(toDate.toString).cast("date")))
-    val ind = inRange
-      .groupBy(col("ORDER NO"), col("payment_tag")).agg(count(lit(1)).as("__n")).drop("__n")
-      .withColumn("INVOICE NO",
-        row_number().over(Window.orderBy(col("ORDER NO"), col("payment_tag"))) +
-          lit(invoiceStartId) - 1)
-    view.as("ti")
-      .join(ind.as("ind"), Seq("ORDER NO", "payment_tag"), "right")
-      .select(
-        col("ti.transaction_id").as("transaction_id"),
-        col("ti.order_id").as("order_id"),
-        col("ti.CUSTOMER NO").as("CUSTOMER NO"),
-        col("ti.CUSTOMER NAME").as("CUSTOMER NAME"),
-        col("ORDER NO"),
-        col("ti.PAID AMOUNT").as("PAID AMOUNT"),
-        col("ti.PAYMENT TYPE").as("PAYMENT TYPE"),
-        col("ti.ORDER LINE - COUNT").as("ORDER LINE - COUNT"),
-        col("ti.ORDER LINE - PROD NAME").as("ORDER LINE - PROD NAME"),
-        col("ti.ORDER LINE - UNIT PRICE").as("ORDER LINE - UNIT PRICE"),
-        col("ti.ORDER LINE - DISCOUNT").as("ORDER LINE - DISCOUNT"),
-        col("ti.ORDER LINE - VAT CODE").as("ORDER LINE - VAT CODE"),
-        col("ti.ORDER LINE - DESCRIPTION").as("ORDER LINE - DESCRIPTION"),
-        col("ti.ORDER LINE - PROD NO").as("ORDER LINE - PROD NO"),
-        col("ti.INVOICE DATE").as("INVOICE DATE"),
-        col("ti.DELIVERY DATE").as("DELIVERY DATE"),
-        col("ti.ORDER DATE").as("ORDER DATE"),
-        col("ti.DUE DATE").as("DUE DATE"),
-        col("ind.INVOICE NO").as("INVOICE NO"))
-      .orderBy(col("INVOICE NO"), col("CUSTOMER NAME"))
-  }
-
-  /** Single-pass equivalent of [[numberInvoices]]: instead of building the
-    * grouped index and right-joining the view back onto it (which consumes
-    * the view twice — `db.py:459-469`'s literal shape), keep rows whose
-    * ("ORDER NO", payment_tag) pair has ≥1 in-range INVOICE DATE via a
-    * pair-partitioned window, and number with dense_rank over the same
-    * pair order — the identical result (spec-asserted) computed in ONE
-    * traversal. Preserves the join-based range semantics exactly: a pair
-    * whose dates straddle the range keeps ALL its rows, matching the right
-    * join.
-    *
-    * Scale note: the dense_rank's single-partition window runs over the
-    * line-level rows rather than the pair index — the right trade when
-    * recomputing/caching the whole view is the alternative. Both forms are
-    * exposed; callers pick per workload.
-    */
-  def numberInvoicesSinglePass(view: DataFrame, fromDate: LocalDate, toDate: LocalDate,
-                               invoiceStartId: Long): DataFrame = {
-    val pairW = Window.partitionBy(col("ORDER NO"), col("payment_tag"))
-    val anyInRange = max(
-      when(col("INVOICE DATE").between(lit(fromDate.toString).cast("date"),
-        lit(toDate.toString).cast("date")), 1).otherwise(0)).over(pairW)
-    view
-      .withColumn("__keep", anyInRange)
-      .filter(col("__keep") === 1)
-      .withColumn("INVOICE NO",
-        dense_rank().over(Window.orderBy(col("ORDER NO"), col("payment_tag")))
-          .cast("long") + lit(invoiceStartId) - 1)
-      .select(
-        col("transaction_id"), col("order_id"), col("CUSTOMER NO"), col("CUSTOMER NAME"),
-        col("ORDER NO"), col("PAID AMOUNT"), col("PAYMENT TYPE"),
-        col("ORDER LINE - COUNT"), col("ORDER LINE - PROD NAME"),
-        col("ORDER LINE - UNIT PRICE"), col("ORDER LINE - DISCOUNT"),
-        col("ORDER LINE - VAT CODE"), col("ORDER LINE - DESCRIPTION"),
-        col("ORDER LINE - PROD NO"), col("INVOICE DATE"), col("DELIVERY DATE"),
-        col("ORDER DATE"), col("DUE DATE"), col("INVOICE NO"))
-      .orderBy(col("INVOICE NO"), col("CUSTOMER NAME"))
-  }
-
-  /** Scale-safe form of the numbering: same result as [[numberInvoices]] /
-    * [[numberInvoicesSinglePass]] (spec-asserted), but no global window
-    * ever sees line-level rows and the view is traversed ONCE.
-    *
-    * Shape: one hash shuffle of the view on the pair key feeds (a) the
-    * pair-partitioned keep-flag window (join-based range semantics: a pair
-    * with ≥1 in-range date keeps ALL its rows) and (b) a partial+final
-    * count aggregate on the SAME keys — no second exchange, and the
-    * shuffle below both consumers is deduplicated by ReuseExchange, so the
-    * expensive view subtree executes once. The single-partition
-    * row_number then runs over the grouped PAIR INDEX (orders × tags —
-    * thousands of rows where the view has millions), and the numbered
-    * index broadcasts back onto the kept rows. At 1000 executors the only
-    * serialized data is the index, never the view.
-    */
-  def numberInvoicesTwoPhase(view: DataFrame, fromDate: LocalDate, toDate: LocalDate,
-                             invoiceStartId: Long): DataFrame = {
-    val pairW = Window.partitionBy(col("ORDER NO"), col("payment_tag"))
-    val anyInRange = max(
-      when(col("INVOICE DATE").between(lit(fromDate.toString).cast("date"),
-        lit(toDate.toString).cast("date")), 1).otherwise(0)).over(pairW)
-    val kept = view
-      .withColumn("__keep", anyInRange)
-      .filter(col("__keep") === 1)
-      .drop("__keep")
-    val ind = kept
-      .groupBy(col("ORDER NO"), col("payment_tag")).agg(count(lit(1)).as("__n")).drop("__n")
-      .withColumn("INVOICE NO",
-        row_number().over(Window.orderBy(col("ORDER NO"), col("payment_tag"))).cast("long") +
-          lit(invoiceStartId) - 1)
-    kept
-      .join(broadcast(ind), Seq("ORDER NO", "payment_tag"))
-      .select(
-        col("transaction_id"), col("order_id"), col("CUSTOMER NO"), col("CUSTOMER NAME"),
-        col("ORDER NO"), col("PAID AMOUNT"), col("PAYMENT TYPE"),
-        col("ORDER LINE - COUNT"), col("ORDER LINE - PROD NAME"),
-        col("ORDER LINE - UNIT PRICE"), col("ORDER LINE - DISCOUNT"),
-        col("ORDER LINE - VAT CODE"), col("ORDER LINE - DESCRIPTION"),
-        col("ORDER LINE - PROD NO"), col("INVOICE DATE"), col("DELIVERY DATE"),
-        col("ORDER DATE"), col("DUE DATE"), col("INVOICE NO"))
-      .orderBy(col("INVOICE NO"), col("CUSTOMER NAME"))
-  }
-
-  /** The flagship's production form: the pair index is built from
-    * `pairDates` — a NARROW source of (ORDER NO, payment_tag,
-    * INVOICE DATE) rows with the same pair/date content as the view
-    * (InvoiceView.tripletexInvoicePairDates) — so the wide view is
-    * traversed exactly ONCE, by the final join. Identical output to
-    * [[numberInvoices]] (spec-asserted): the inner join reproduces the
-    * reference's RIGHT join because every index pair has ≥1 view row by
-    * construction. The only single-partition work is the row_number over
-    * the distinct pair index (orders × tags), and the numbered index
-    * broadcasts back onto the view.
-    */
-  def numberInvoicesIndexed(view: DataFrame, pairDates: DataFrame,
-                            fromDate: LocalDate, toDate: LocalDate,
-                            invoiceStartId: Long): DataFrame = {
-    val ind = pairDates
+    val ind = InvoiceView.tripletexInvoicePairDates(t)
       .filter(col("INVOICE DATE").between(lit(fromDate.toString).cast("date"),
         lit(toDate.toString).cast("date")))
       .select(col("ORDER NO"), col("payment_tag")).distinct()
       .withColumn("INVOICE NO",
         row_number().over(Window.orderBy(col("ORDER NO"), col("payment_tag"))).cast("long") +
           lit(invoiceStartId) - 1)
-    view
+    InvoiceView.tripletexInvoice(t)
       .join(broadcast(ind), Seq("ORDER NO", "payment_tag"))
       .select(
         col("transaction_id"), col("order_id"), col("CUSTOMER NO"), col("CUSTOMER NAME"),

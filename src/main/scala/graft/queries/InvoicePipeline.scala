@@ -23,18 +23,8 @@ object InvoicePipeline {
 
   private val dec = "decimal(38,9)"
 
-  /** Derive the Shopify-shaped tables from the synthetic star schema.
-    *
-    * `persistBases` caches the narrow shared derivations that every view
-    * branch re-reads — transactions (a 4-way union over orders) and the
-    * line-item products projection (a per-order row_number window over
-    * lineitem): without the cache the flagship recomputes the lip window
-    * for each of its 6 lineitem consumers and the transactions union for
-    * each of its branches. The cached frames are a few narrow columns —
-    * MEMORY_AND_DISK-safe at any SF (the standard multi-consumer persist).
-    */
-  def buildTables(spark: SparkSession, dir: String,
-                  persistBases: Boolean = false): InvoiceView.Tables = {
+  /** Derive the Shopify-shaped tables from the synthetic star schema. */
+  def buildTables(spark: SparkSession, dir: String): InvoiceView.Tables = {
     import spark.implicits._
     val o = orders(spark, dir)
     val c = customer(spark, dir)
@@ -116,8 +106,7 @@ object InvoicePipeline {
       when($"o_orderkey" % 3 === 0, lit(null).cast(dec))
         .otherwise((lit(100.0) + ($"o_orderkey" % 7) * 10.0).cast(dec)).as("refund_amount"))
 
-    def p(df: org.apache.spark.sql.DataFrame) = if (persistBases) df.persist() else df
-    InvoiceView.Tables(p(customersD), p(ordersD), p(transactionsD), p(lipD),
+    InvoiceView.Tables(customersD, ordersD, transactionsD, lipD,
       shippingD, refundsD, liprD)
   }
 
@@ -137,24 +126,7 @@ object InvoicePipeline {
     "ORDER LINE - UNIT PRICE", "ORDER LINE - COUNT")
 
   def invoicePipeline(spark: SparkSession, dir: String): DataFrame = {
-    // sorted=false: the numbering re-sorts, the view's ORDER BY would be
-    // dead weight. Indexed numbering traverses the wide view exactly once:
-    // the pair index comes from the narrow 3-column twin (pruned scans;
-    // stp/pl served from the view's persisted subplans), and no global
-    // window ever sees line-level rows (equivalence spec-asserted).
-    // persist=false + pushedDistinct=true (measured, ProfileQ36Variants):
-    // caching the wide pl costs more than its consumers save (and racing
-    // broadcast subtrees can double-build it); the pushed distinct keeps
-    // the only large shuffle at the narrow 8-column lip dedup, which
-    // ReuseExchange serves to every consumer within the one plan.
-    val tables = buildTables(spark, dir)
-    val view = InvoiceView.tripletexInvoice(tables, sorted = false,
-      persist = false)
-    // pairDates skips the lip dedup (pushedDistinct=false): the numbering
-    // index distincts its pairs anyway, and without the blocking distinct
-    // Catalyst prunes the lip scan to the join column only.
-    val numbered = InvoiceNumbers.numberInvoicesIndexed(view,
-      InvoiceView.tripletexInvoicePairDates(tables),
+    val numbered = InvoiceNumbers.numberInvoices(buildTables(spark, dir),
       LocalDate.parse("1996-01-01"), LocalDate.parse("1998-12-31"), 5000L)
     val money = Seq("PAID AMOUNT", "ORDER LINE - UNIT PRICE", "ORDER LINE - DISCOUNT")
     val out = money.foldLeft(numbered)((d, c) => d.withColumn(c, col(c).cast("double")))

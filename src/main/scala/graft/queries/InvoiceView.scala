@@ -18,6 +18,8 @@ import org.apache.spark.sql.expressions.Window
   *    constant `pl.rank`, a no-op — the work happens at the outer filter).
   *  - PG `CONCAT(...)` ignores NULL arguments (unlike `||` and unlike
   *    Spark's `concat`): reproduced via [[pgConcat]].
+  *  - No view `ORDER BY` (`setup.sql:392-393`): the view's only consumer,
+  *    the numbering, sorts its own output.
   *
   * All joins against dimension tables (orders, customers) are broadcast —
   * at scale the fact sides (transactions, line items) shuffle only where a
@@ -240,8 +242,7 @@ object InvoiceView {
 
   /** The 8-column lip projection product_lines actually consumes, deduped —
     * the pushed-down form of the view's UNION-distinct (see
-    * [[tripletexInvoice]]). One canonical definition so the view and the
-    * pair-index twin build PLAN-IDENTICAL subtrees (cache/exchange reuse).
+    * [[tripletexInvoice]]).
     */
   private def dedupedLip(lip: DataFrame): DataFrame =
     lip.select(
@@ -267,93 +268,59 @@ object InvoiceView {
     typed.select(branchCols.map(col): _*)
   }
 
-  /** The full view (`setup.sql:358-394`): UNION-distinct of the four
-    * branches (load-bearing dedup), outer rank filter, money rounding,
-    * final projection + sort. `priority` participates in the sort only.
+  /** The full view (`setup.sql:358-394`): union of the four branches, outer
+    * rank filter, money rounding, final projection — unsorted (see the
+    * divergences above).
+    *
+    * The reference's trailing UNION-distinct (`setup.sql:358-365`,
+    * load-bearing dedup) is a wide 21-column hash-shuffle over every
+    * line-level row. It is pushed below the joins here, because:
+    *  (1) the four branches are pairwise DISJOINT row sets — each carries
+    *      its own `priority` literal (1..4) as a row column — so the
+    *      global distinct ≡ union of per-branch distincts;
+    *  (2) product_lines rows are unique once its lip input is deduped on
+    *      the 8 columns the branch projects: stp rank-1 is unique per
+    *      order (row_number), orders/customers join by PRIMARY KEY, and
+    *      t.id rides in every row — so duplicates can only originate in
+    *      the narrow lip projection;
+    *  (3) shipping_lines (ship_rank=1 per order) and gift_card_lines (one
+    *      row per gift transaction id) are structurally duplicate-free;
+    *  (4) refund_lines keeps a branch-LOCAL distinct (tiny: one row per
+    *      refund line) — two distinct lipr rows can reference different
+    *      lip rows that project identically.
+    * Equality with the literal wide distinct is spec-asserted
+    * (GoldenE2ESpec), including on inputs with planted duplicate line
+    * items. Assumes money inputs are already at ≤ (38,9) decimal scale
+    * (true for every Shopify-normalized table) — otherwise the pre-cast
+    * dedup could be finer than the post-cast one.
     */
-  /** `sorted = false` skips the view's trailing ORDER BY
-    * (`setup.sql:392-393`) for consumers that immediately re-sort (the
-    * numbering pipeline): a global range sort below a persist() would be
-    * materialized, not optimized away.
-    */
-  def tripletexInvoice(t: Tables, sorted: Boolean = true,
-                       persist: Boolean = true,
-                       pushedDistinct: Boolean = true): DataFrame = {
-    // stp feeds product_lines and gift_card_lines; product_lines feeds the
-    // union and shipping_lines — persisting both roughly halves the
-    // pipeline's cold time (measured in tools.ProfileInvoice). The final
-    // view is NOT persisted: its consumers traverse it once, and columnar
-    // cache construction for the wide result costs more than recomputing.
-    // ── Pushed-distinct rewrite (default) ─────────────────────────────────
-    // The trailing UNION-distinct (`setup.sql:358-365`, load-bearing dedup)
-    // is a wide 21-column hash-shuffle over every line-level row. It can be
-    // pushed below the joins because:
-    //  (1) the four branches are pairwise DISJOINT row sets — each carries
-    //      its own `priority` literal (1..4) as a row column — so the
-    //      global distinct ≡ union of per-branch distincts;
-    //  (2) product_lines rows are unique once its lip input is deduped on
-    //      the 8 columns the branch projects: stp rank-1 is unique per
-    //      order (row_number), orders/customers join by PRIMARY KEY, and
-    //      t.id rides in every row — so duplicates can only originate in
-    //      the narrow lip projection;
-    //  (3) shipping_lines (ship_rank=1 per order) and gift_card_lines (one
-    //      row per gift transaction id) are structurally duplicate-free;
-    //  (4) refund_lines keeps a branch-LOCAL distinct (tiny: one row per
-    //      refund line) — two distinct lipr rows can reference different
-    //      lip rows that project identically.
-    // Equality with the literal wide distinct is spec-asserted
-    // (InvoiceViewSpec), including on inputs with planted duplicate line
-    // items. Caveat: assumes money inputs are already at ≤ (38,9) decimal
-    // scale (true for every Shopify-normalized table) — otherwise the
-    // pre-cast dedup could be finer than the post-cast one; pass
-    // pushedDistinct=false for exotic inputs.
-    // Persist policy (measured, tools.ProfileQ36Variants): persist the
-    // NARROW shared inputs — stp (one row per successful payment) and the
-    // deduped 8-column lip projection — never the wide `pl`. Caching the
-    // wide view costs more to build than its consumers save, and racing
-    // broadcast subtrees double-build it; the narrow caches are cheap to
-    // build and serve every consumer (union, shipping, pair index).
-    val stp0 = successTransactionPayments(t.transactions)
-    val stp = if (persist) stp0.persist() else stp0
-    val plInput = if (pushedDistinct) {
-      val lipDedup0 = dedupedLip(t.lineItemProducts)
-      t.copy(lineItemProducts = if (persist) lipDedup0.persist() else lipDedup0)
-    } else t
-    val pl0 = productLines(plInput, stp)
-    // wide-distinct path keeps the legacy pl persist (its distinct consumes
-    // pl twice as often); pushed path reads pl straight through
-    val pl = if (persist && !pushedDistinct) pl0.persist() else pl0
-    val refunds0 = aligned(refundLines(t))
-    val refunds = if (pushedDistinct) refunds0.distinct() else refunds0
-    val unionAll = aligned(pl)
-      .unionByName(refunds)
+  def tripletexInvoice(t: Tables): DataFrame = {
+    val stp = successTransactionPayments(t.transactions)
+    val pl = productLines(t.copy(lineItemProducts = dedupedLip(t.lineItemProducts)), stp)
+    aligned(pl)
+      .unionByName(aligned(refundLines(t)).distinct())
       .unionByName(aligned(shippingLines(t, stp)))
       .unionByName(aligned(giftCardLines(t, stp)))
-    val deduped = (if (pushedDistinct) unionAll else unionAll.distinct())
       .filter(col("rank") === 1)
-    val unioned =
-      if (sorted) deduped.orderBy(col("INVOICE DATE").desc, col("order_id").asc,
-        col("CUSTOMER NAME").asc, col("priority").asc)
-      else deduped
-    unioned.select(
-      col("transaction_id"), col("order_id"), col("payment_tag"),
-      col("CUSTOMER NO"), col("CUSTOMER NAME"), col("ORDER NO"),
-      round(col("PAID AMOUNT"), 2).as("PAID AMOUNT"),
-      col("ORDER LINE - COUNT"),
-      col("ORDER LINE - PROD NAME"),
-      round(col("ORDER LINE - UNIT PRICE"), 2).as("ORDER LINE - UNIT PRICE"),
-      round(col("ORDER LINE - DISCOUNT"), 2).as("ORDER LINE - DISCOUNT"),
-      col("ORDER LINE - VAT CODE"),
-      col("ORDER LINE - DESCRIPTION"),
-      col("ORDER LINE - PROD NO"),
-      col("PAYMENT TYPE"),
-      col("INVOICE DATE"), col("DELIVERY DATE"), col("ORDER DATE"), col("DUE DATE"))
+      .select(
+        col("transaction_id"), col("order_id"), col("payment_tag"),
+        col("CUSTOMER NO"), col("CUSTOMER NAME"), col("ORDER NO"),
+        round(col("PAID AMOUNT"), 2).as("PAID AMOUNT"),
+        col("ORDER LINE - COUNT"),
+        col("ORDER LINE - PROD NAME"),
+        round(col("ORDER LINE - UNIT PRICE"), 2).as("ORDER LINE - UNIT PRICE"),
+        round(col("ORDER LINE - DISCOUNT"), 2).as("ORDER LINE - DISCOUNT"),
+        col("ORDER LINE - VAT CODE"),
+        col("ORDER LINE - DESCRIPTION"),
+        col("ORDER LINE - PROD NO"),
+        col("PAYMENT TYPE"),
+        col("INVOICE DATE"), col("DELIVERY DATE"), col("ORDER DATE"), col("DUE DATE"))
   }
 
   /** Narrow 3-column twin of the view for pair-index building: the DISTINCT
     * set of (ORDER NO, payment_tag, INVOICE DATE) triples the view carries —
-    * the only thing [[InvoiceNumbers.numberInvoicesIndexed]] consumes (it
-    * date-filters, distincts the pairs, and numbers them).
+    * all that [[InvoiceNumbers.numberInvoices]] builds its pair index from
+    * (it date-filters, distincts the pairs, and numbers them).
     *
     * Slimmed to TWO branches (r7). The view's four branches yield:
     *  - product_lines: (o.name, 'payment', date(o.created_at)) per rank-1

@@ -65,45 +65,39 @@ object Checks {
       else Seq(s"The following ${g.length} orders include gift cards: ${g.mkString(", ")}."))
   }
 
+  /** U2 gap finder shared by [[orderNo]] and [[invoiceNo]]: the numbers
+    * strictly between min and max of `n` (a long column) that do not occur
+    * — an anti-join against spark.range; only the missing ones are collected.
+    * Ascending.
+    */
+  private def missingNumbers(n: DataFrame): Seq[Long] = {
+    val nums = n.toDF("n").distinct().cache()
+    val bounds = nums.agg(min(col("n")), max(col("n"))).head()
+    val missing = if (bounds.isNullAt(0)) Nil
+    else n.sparkSession.range(bounds.getLong(0) + 1, bounds.getLong(1)).toDF("n")
+      .join(nums, Seq("n"), "left_anti")
+      .orderBy("n").collect().map(_.getLong(0)).toSeq
+    nums.unpersist()
+    missing
+  }
+
   /** `tripletex.py:65-82`: gaps in the order-number sequence of non-refund
-    * rows — F11 parse + U2 anti-join against spark.range (never a driver
-    * set).
+    * rows — F11 parse + U2 gap finder.
     */
   def orderNo(df: DataFrame): Finding = {
-    val nums = df.filter(col("PAID AMOUNT") >= 0)
-      .select(substring(col("ORDER NO"), 2, 18).cast("long").as("n"))
-      .distinct().cache()
-    val bounds = nums.agg(min(col("n")), max(col("n"))).head()
-    val finding = if (bounds.isNullAt(0)) Finding("order_no", passed = true, Nil)
-    else {
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val missing = df.sparkSession.range(lo + 1, hi).toDF("n")
-        .join(nums, Seq("n"), "left_anti")
-        .orderBy("n").collect().map(r => "#" + r.getLong(0)).toSeq
-      Finding("order_no", missing.isEmpty,
-        if (missing.isEmpty) Nil
-        else Seq(s"The following ${missing.length} orders are missing: ${missing.mkString(", ")}"))
-    }
-    nums.unpersist()
-    finding
+    val missing = missingNumbers(df.filter(col("PAID AMOUNT") >= 0)
+      .select(substring(col("ORDER NO"), 2, 18).cast("long"))).map("#" + _)
+    Finding("order_no", missing.isEmpty,
+      if (missing.isEmpty) Nil
+      else Seq(s"The following ${missing.length} orders are missing: ${missing.mkString(", ")}"))
   }
 
   /** `tripletex.py:85-99`: gaps in invoice numbers. */
   def invoiceNo(df: DataFrame): Finding = {
-    val nums = df.select(col("INVOICE NO").cast("long").as("n")).distinct().cache()
-    val bounds = nums.agg(min(col("n")), max(col("n"))).head()
-    val finding = if (bounds.isNullAt(0)) Finding("invoice_no", passed = true, Nil)
-    else {
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val missing = df.sparkSession.range(lo + 1, hi).toDF("n")
-        .join(nums, Seq("n"), "left_anti")
-        .orderBy("n").collect().map(_.getLong(0).toString).toSeq
-      Finding("invoice_no", missing.isEmpty,
-        if (missing.isEmpty) Nil
-        else Seq(s"The following ${missing.length} invoice numbers are missing: ${missing.mkString(", ")}"))
-    }
-    nums.unpersist()
-    finding
+    val missing = missingNumbers(df.select(col("INVOICE NO").cast("long")))
+    Finding("invoice_no", missing.isEmpty,
+      if (missing.isEmpty) Nil
+      else Seq(s"The following ${missing.length} invoice numbers are missing: ${missing.mkString(", ")}"))
   }
 
   /** `tripletex.py:30-42` (with the last-column-only return bug fixed). */

@@ -4,7 +4,7 @@ import java.time.LocalDate
 import org.apache.spark.sql.SparkSession
 import graft.ingest.{IngestPipeline, ShopifyClient}
 import graft.io.InvoiceCsv
-import graft.queries.{InvoiceNumbers, InvoiceView}
+import graft.queries.InvoiceNumbers
 import graft.store.ShopifyStore
 
 /** One-shot generator for the checked-in golden CSV
@@ -27,9 +27,8 @@ object GoldenCsvGen {
       new ShopifyClient.FixtureTransport(Fixtures.transportFixtures), Fixtures.base)
     IngestPipeline.shopifyUpdate(spark, store, client,
       Some("2021-05-01"), Some("2021-05-31"))
-    val view = InvoiceView.tripletexInvoice(store.invoiceTables)
     val numbered = InvoiceNumbers.replaceInvoiceGateway(
-      InvoiceNumbers.numberInvoices(view,
+      InvoiceNumbers.numberInvoices(store.invoiceTables,
         LocalDate.parse("2021-05-01"), LocalDate.parse("2021-05-31"), 100),
       Map("vipps" -> "Vipps", "stripe" -> "Stripe"))
     val out = "src/test/resources/golden_invoices.csv"

@@ -30,7 +30,7 @@ class GoldenE2ESpec extends SparkSuite {
   private lazy val view = InvoiceView.tripletexInvoice(store.invoiceTables).cache()
 
   private lazy val numbered = InvoiceNumbers.replaceInvoiceGateway(
-    InvoiceNumbers.numberInvoices(view,
+    InvoiceNumbers.numberInvoices(store.invoiceTables,
       LocalDate.parse("2021-05-01"), LocalDate.parse("2021-05-31"), 100),
     Map("vipps" -> "Vipps", "stripe" -> "Stripe")).cache()
 
@@ -174,61 +174,95 @@ class GoldenE2ESpec extends SparkSuite {
     assert(store.read("orders").count() == 3)
   }
 
-  test("single-pass numbering is equivalent to the join-based form") {
-    import org.apache.spark.sql.functions.col
-    val joined = InvoiceNumbers.numberInvoices(view,
-      LocalDate.parse("2021-05-01"), LocalDate.parse("2021-05-31"), 100)
-    val single = InvoiceNumbers.numberInvoicesSinglePass(view,
-      LocalDate.parse("2021-05-01"), LocalDate.parse("2021-05-31"), 100)
-    assert(joined.columns.toSeq == single.columns.toSeq)
-    val key = joined.columns.map(col).toSeq
-    assert(joined.orderBy(key: _*).collect().toSeq ==
-      single.orderBy(key: _*).collect().toSeq)
-    val twoPhase = InvoiceNumbers.numberInvoicesTwoPhase(view,
-      LocalDate.parse("2021-05-01"), LocalDate.parse("2021-05-31"), 100)
-    assert(twoPhase.columns.toSeq == joined.columns.toSeq)
-    assert(joined.orderBy(key: _*).collect().toSeq ==
-      twoPhase.orderBy(key: _*).collect().toSeq)
-    val indexed = InvoiceNumbers.numberInvoicesIndexed(view,
-      InvoiceView.tripletexInvoicePairDates(store.invoiceTables),
-      LocalDate.parse("2021-05-01"), LocalDate.parse("2021-05-31"), 100)
-    assert(indexed.columns.toSeq == joined.columns.toSeq)
-    assert(joined.orderBy(key: _*).collect().toSeq ==
-      indexed.orderBy(key: _*).collect().toSeq)
-    // and on a range that splits a pair's dates: all forms keep the whole pair
-    val narrowJ = InvoiceNumbers.numberInvoices(view,
-      LocalDate.parse("2021-05-04"), LocalDate.parse("2021-05-31"), 1)
-    val narrowS = InvoiceNumbers.numberInvoicesSinglePass(view,
-      LocalDate.parse("2021-05-04"), LocalDate.parse("2021-05-31"), 1)
-    val narrowT = InvoiceNumbers.numberInvoicesTwoPhase(view,
-      LocalDate.parse("2021-05-04"), LocalDate.parse("2021-05-31"), 1)
-    assert(narrowJ.orderBy(key: _*).collect().toSeq ==
-      narrowS.orderBy(key: _*).collect().toSeq)
-    assert(narrowJ.orderBy(key: _*).collect().toSeq ==
-      narrowT.orderBy(key: _*).collect().toSeq)
+  /** The view as `setup.sql:358-394` writes it: the four branches, a wide
+    * UNION-distinct over all 21 columns, the outer rank filter and the
+    * money rounding. [[InvoiceView.tripletexInvoice]] pushes the distinct
+    * below the joins and must still yield exactly these rows.
+    */
+  private def literalView(t: InvoiceView.Tables) = {
+    val stp = InvoiceView.successTransactionPayments(t.transactions)
+    val wide = InvoiceView.aligned(InvoiceView.productLines(t, stp))
+      .unionByName(InvoiceView.aligned(InvoiceView.refundLines(t)))
+      .unionByName(InvoiceView.aligned(InvoiceView.shippingLines(t, stp)))
+      .unionByName(InvoiceView.aligned(InvoiceView.giftCardLines(t, stp)))
+      .distinct()
+      .filter(col("rank") === 1)
+    val money = Set("PAID AMOUNT", "ORDER LINE - UNIT PRICE", "ORDER LINE - DISCOUNT")
+    wide.select(InvoiceView.tripletexInvoice(t).columns.toSeq.map(c =>
+      if (money(c)) round(col(c), 2).as(c) else col(c)): _*)
   }
 
-  test("pushed-distinct view rewrite equals the literal wide union-distinct") {
-    import org.apache.spark.sql.functions.col
-    val t0 = store.invoiceTables
-    // plant extra duplicates beyond the fixture's Sweater pair: a lip row
-    // identical in the 8 projected columns but with a fresh id (must still
-    // collapse), and a duplicated lipr row (exercises the refund branch's
-    // local distinct)
+  /** The reference's numbering as `db.py:459-469` writes it: a distinct
+    * (ORDER NO, payment_tag) index over the in-range view rows, numbered,
+    * then RIGHT JOINed back onto the whole view.
+    */
+  private def rightJoinNumbering(view: org.apache.spark.sql.DataFrame, from: String,
+                                 to: String, invoiceStartId: Long) = {
+    import org.apache.spark.sql.expressions.Window
+    val ind = view
+      .filter(col("INVOICE DATE").between(lit(from).cast("date"), lit(to).cast("date")))
+      .select(col("ORDER NO"), col("payment_tag")).distinct()
+      .withColumn("INVOICE NO",
+        row_number().over(Window.orderBy(col("ORDER NO"), col("payment_tag"))).cast("long") +
+          lit(invoiceStartId) - 1)
+    view.as("ti")
+      .join(ind.as("ind"), Seq("ORDER NO", "payment_tag"), "right")
+      .select(
+        col("ti.transaction_id").as("transaction_id"),
+        col("ti.order_id").as("order_id"),
+        col("ti.CUSTOMER NO").as("CUSTOMER NO"),
+        col("ti.CUSTOMER NAME").as("CUSTOMER NAME"),
+        col("ORDER NO"),
+        col("ti.PAID AMOUNT").as("PAID AMOUNT"),
+        col("ti.PAYMENT TYPE").as("PAYMENT TYPE"),
+        col("ti.ORDER LINE - COUNT").as("ORDER LINE - COUNT"),
+        col("ti.ORDER LINE - PROD NAME").as("ORDER LINE - PROD NAME"),
+        col("ti.ORDER LINE - UNIT PRICE").as("ORDER LINE - UNIT PRICE"),
+        col("ti.ORDER LINE - DISCOUNT").as("ORDER LINE - DISCOUNT"),
+        col("ti.ORDER LINE - VAT CODE").as("ORDER LINE - VAT CODE"),
+        col("ti.ORDER LINE - DESCRIPTION").as("ORDER LINE - DESCRIPTION"),
+        col("ti.ORDER LINE - PROD NO").as("ORDER LINE - PROD NO"),
+        col("ti.INVOICE DATE").as("INVOICE DATE"),
+        col("ti.DELIVERY DATE").as("DELIVERY DATE"),
+        col("ti.ORDER DATE").as("ORDER DATE"),
+        col("ti.DUE DATE").as("DUE DATE"),
+        col("ind.INVOICE NO").as("INVOICE NO"))
+  }
+
+  private def sameRows(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) = {
+    assert(a.columns.toSeq == b.columns.toSeq)
+    val key = a.columns.map(col).toSeq
+    assert(a.orderBy(key: _*).collect().toSeq == b.orderBy(key: _*).collect().toSeq)
+  }
+
+  /** The fixture tables plus planted duplicates beyond the Sweater pair: a
+    * lip row identical in the 8 projected columns but with a fresh id (must
+    * still collapse), and a duplicated lipr row (exercises the refund
+    * branch's local distinct).
+    */
+  private def withPlantedDuplicates(t0: InvoiceView.Tables) = {
     val dupLip = t0.lineItemProducts.limit(1).withColumn("id", col("id") + 77000000L)
     val dupLipr = t0.lineItemProductRefunds.limit(1)
       .withColumn("id", col("id") + 77000000L)
-    val t = t0.copy(
+    t0.copy(
       lineItemProducts = t0.lineItemProducts.unionByName(dupLip),
       lineItemProductRefunds = t0.lineItemProductRefunds.unionByName(dupLipr))
-    val pushed = InvoiceView.tripletexInvoice(t, sorted = false, persist = false,
-      pushedDistinct = true)
-    val literal = InvoiceView.tripletexInvoice(t, sorted = false, persist = false,
-      pushedDistinct = false)
-    assert(pushed.columns.toSeq == literal.columns.toSeq)
-    val key = pushed.columns.map(col).toSeq
-    assert(pushed.orderBy(key: _*).collect().toSeq ==
-      literal.orderBy(key: _*).collect().toSeq)
+  }
+
+  test("production numbering equals the reference right-join form") {
+    // on the full May range, and on a range that splits a pair's dates:
+    // the whole pair is kept either way
+    for ((from, to, start) <- Seq(("2021-05-01", "2021-05-31", 100L),
+                                  ("2021-05-04", "2021-05-31", 1L))) {
+      val t = withPlantedDuplicates(store.invoiceTables)
+      sameRows(InvoiceNumbers.numberInvoices(t, LocalDate.parse(from), LocalDate.parse(to), start),
+        rightJoinNumbering(literalView(t), from, to, start))
+    }
+  }
+
+  test("pushed-distinct view rewrite equals the literal wide union-distinct") {
+    val t = withPlantedDuplicates(store.invoiceTables)
+    sameRows(InvoiceView.tripletexInvoice(t), literalView(t))
   }
 
   test("shipping_lines without pl equals the reference's pl-joined CTE") {
@@ -273,7 +307,7 @@ class GoldenE2ESpec extends SparkSuite {
   test("slim pair-dates twin carries exactly the view's distinct triple set") {
     // r7: the 2-branch pair-dates twin must yield the same DISTINCT
     // (ORDER NO, payment_tag, INVOICE DATE) set as the literal 4-branch
-    // union — the only content numberInvoicesIndexed consumes.
+    // union — the only content numberInvoices builds its pair index from.
     import org.apache.spark.sql.functions._
     val t = store.invoiceTables
     val stp = InvoiceView.successTransactionPayments(t.transactions)
